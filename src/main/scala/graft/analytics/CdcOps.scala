@@ -29,17 +29,6 @@ object CdcOps extends QueryPack {
 
   private val V = 50257
 
-  private val timing = sys.env.get("GRAFT_CDCOPS_TIMING").contains("1")
-  private def timed[A](label: String)(a: => A): A = {
-    if (!timing) a
-    else {
-      val t0 = System.nanoTime()
-      val r = a
-      println(f"[cdcops-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   /** Tokenize a text column: split on spaces, drop empties, hash words. */
   private def tokenize(text: Column): Column = {
     val words = filter(split(text, " "), w => length(w) > 0)
@@ -486,20 +475,18 @@ object CdcOps extends QueryPack {
       Files.createDirectories(logDir)
       val t0 = System.currentTimeMillis()
       val log = changelogCached(s, dir)
-      timed("replay log-build") {
-        val tagged = epochBatches(s, dir, log)
-          .map { case (k, batch) => batch.withColumn("_chunk", lit(k.toLong)) }
-          .reduce(_.unionByName(_))
-        ChangelogGen.writeChunkedLog(tagged, logDir,
-          k => f"chunk-$k%05d.parquet", t0, expected = (0L until 5L))
-      }
-      val table = timed("replay ingest")(IngestJob.replay(s, IngestJob.Config(
+      val tagged = epochBatches(s, dir, log)
+        .map { case (k, batch) => batch.withColumn("_chunk", lit(k.toLong)) }
+        .reduce(_.unionByName(_))
+      ChangelogGen.writeChunkedLog(tagged, logDir,
+        k => f"chunk-$k%05d.parquet", t0, expected = (0L until 5L))
+      val table = IngestJob.replay(s, IngestJob.Config(
         logDir = logDir.toString,
         tableDir = s"$work/table",
         checkpointDir = s"$work/ckpt",
         maxFilesPerTrigger = Some(1),
         numBuckets = 8,
-        quarantineDir = Some(s"$work/quarantine"))))
+        quarantineDir = Some(s"$work/quarantine")))
       Replay(table, s"$work/quarantine", work)
     }
 

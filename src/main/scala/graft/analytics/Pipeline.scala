@@ -149,17 +149,6 @@ object Pipeline {
       exactUniqueGate: Boolean = false): Marts =
     cache.getOrElseUpdate(dir, fp(s, dir))(runOnce(s, dir, gates, exactUniqueGate))
 
-  private val timing = sys.env.get("GRAFT_PIPELINE_TIMING").contains("1")
-  private def timed[A](label: String)(a: => A): A = {
-    if (!timing) a
-    else {
-      val t0 = System.nanoTime()
-      val r = a
-      println(f"[pipeline-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   private def runOnce(s: SparkSession, dir: String, gates: Boolean,
       exactUniqueGate: Boolean): Marts = {
     import s.implicits._
@@ -184,13 +173,13 @@ object Pipeline {
       // rows): two full lineitem scans become one. dbt runs one SELECT
       // per layer; at 100 TB every saved corpus scan is the win
       // (guide §1.2 "don't compute things twice").
-      timed("gate-staging+intermediate")(Checks.gateOnePassApproxUnique(
+      Checks.gateOnePassApproxUnique(
         "staging+intermediate", stgLines,
         uniqueKey = Seq("order_key", "line_no"),
         "not_null_order_key" -> col("order_key").isNull,
         "positive_qty" -> (validPred && col("qty") <= 0),
         "disc_in_range" -> (validPred && (col("disc") < 0.0 || col("disc") > 1.0)),
-        "accepted_return_flag" -> (validPred && !col("return_flag").isin("A", "N", "R"))))
+        "accepted_return_flag" -> (validPred && !col("return_flag").isin("A", "N", "R")))
       if (exactUniqueGate)
         Checks.gateWarn("staging",
           "unique_order_line" -> Checks.unique(stgLines, Seq("order_key", "line_no")))
@@ -214,8 +203,8 @@ object Pipeline {
       .join(broadcast(n), $"c_nationkey" === $"n_nationkey", "left")
       .drop("c_custkey", "c_nationkey", "n_nationkey")
       .persist()
-    if (gates) timed("gate-marts-core")(Checks.gateOnePass("marts_core", obt,
-      "not_null_nation" -> col("nation").isNull))
+    if (gates) Checks.gateOnePass("marts_core", obt,
+      "not_null_nation" -> col("nation").isNull)
 
     // ── marts: aggregation + insight, BOTH from the cached OBT ─────────
     val aggMonthly = obt

@@ -87,16 +87,6 @@ object IngestJob {
     cfg.maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
     val stream = reader.parquet(cfg.logDir)
 
-    val timing = sys.env.get("GRAFT_INGEST_TIMING").contains("1")
-    def timed[A](label: String)(a: => A): A = {
-      if (!timing) a
-      else {
-        val t0 = System.nanoTime()
-        val r = a
-        println(f"[ingest-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-    }
     val applyBatch: (Dataset[Row], Long) => Unit = { (batch, epochId) =>
       // foreachBatch hands over an RDD-backed frame (LogicalRDD wrapping
       // the executed source scan), NOT a catalyst file relation: column
@@ -113,12 +103,11 @@ object IngestJob {
         cfg.quarantineDir.foreach { qd =>
           // Epoch-suffixed dir: a replayed epoch overwrites its own quarantine
           // output instead of double-appending (idempotent side channel).
-          timed(s"epoch-$epochId quarantine")(src.filter(!validExpr(src, cfg.maxTok))
-            .write.mode("overwrite").parquet(s"$qd/epoch=$epochId"))
+          src.filter(!validExpr(src, cfg.maxTok))
+            .write.mode("overwrite").parquet(s"$qd/epoch=$epochId")
         }
-        timed(s"epoch-$epochId merge")(
-          MergeEngine.merge(spark, table, valid, cfg.queryId, epochId,
-            saltBuckets = cfg.saltBuckets, writeSplits = cfg.writeSplits, mode = cfg.mode))
+        MergeEngine.merge(spark, table, valid, cfg.queryId, epochId,
+          saltBuckets = cfg.saltBuckets, writeSplits = cfg.writeSplits, mode = cfg.mode)
         // amortized maintenance: fold delta files back into base on a
         // SIZE-based trigger (delta bytes / file count per bucket), not a
         // fixed epoch counter — see [[CompactionPolicy]]. Lineage is

@@ -218,7 +218,7 @@ object Manifest {
   def stepChangesOf(s: String): Option[(Long, Seq[FileEntry], Seq[String])] = {
     val node = mapper.readTree(s)
     if (node.has("filesAdded")) {
-      val d = mapper.readValue(s, classOf[DeltaManifest])
+      val d = mapper.treeToValue(node, classOf[DeltaManifest])
       Some((d.parentVersion, d.filesAdded, d.filesRemoved))
     } else if (node.has("stepAdded")) {
       val added = mapper.treeToValue(node.get("stepAdded"), classOf[Array[FileEntry]]).toSeq

@@ -57,17 +57,6 @@ object MergeEngine {
     */
   private val MetricsRetained = 4096
 
-  private val timing = sys.env.get("GRAFT_MERGE_TIMING").contains("1")
-  private def timed[A](label: String)(a: => A): A = {
-    if (!timing) a
-    else {
-      val t0 = System.nanoTime()
-      val r = a
-      println(f"[merge-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   /** Max automatic rebases after an optimistic-concurrency loss before
     * the ConcurrentCommitException propagates to the caller.
     */
@@ -158,14 +147,14 @@ object MergeEngine {
     // One small stats job drives watermark advance, touched buckets and
     // epoch metrics (collect is O(partitions × buckets × 4), driver-safe
     // at any scale; scans only 4 columns).
-    val statsRows = timed("stats-job")(events
+    val statsRows = events
       .groupBy(
         col("partition"),
         SnapshotTable.bucketOf(col("doc_id"), m.numBuckets).as("_bucket"),
         (col("lsn") <= wmFloor).as("stale"),
         (col("op") === Model.OpDelete).as("isdel"))
       .agg(count(lit(1)).as("n"), max(col("lsn")).as("max_lsn"))
-      .collect())
+      .collect()
 
     val eventsIn = statsRows.map(_.getLong(4)).sum
     val belowWm = statsRows.filter(_.getBoolean(2)).map(_.getLong(4)).sum
@@ -264,19 +253,19 @@ object MergeEngine {
               Seq(col("lsn").as(Model.LsnCol), col("op").as(Model.OpCol),
                 col(Model.BucketCol)): _*)
         val out = if (sortDeltas) withBucket.sortWithinPartitions(Model.BucketCol) else withBucket
-        timed("write-delta")(out.write
+        out.write
           .option("maxRecordsPerFile", 4000000)
           .mode("overwrite")
-          .parquet(outDir.toString))
+          .parquet(outDir.toString)
 
         // bucket = -1 = "range file"; the real coverage is [bucketLo,
         // bucketHi] from the footer stats. MOR delta files depend only on
         // the batch (not on table contents), so a lost commit race rebases
         // by RE-POINTING these files at a higher version — no rewrite.
         val written = table.listDataFiles(outDir)
-        val newEntries = timed("file-stats")(
+        val newEntries =
           FileStats.entries(spark, written.map(path => (path, -1)), p.schemaId)
-            .map(_.copy(kind = FileEntry.Delta)))
+            .map(_.copy(kind = FileEntry.Delta))
         StagedMor(newEntries, p.newSchema, p.wmAdvances,
           EpochMetrics(queryId, epochId, p.eventsIn, p.belowWm,
             collapsedInBatch = 0,
@@ -354,15 +343,15 @@ object MergeEngine {
       val out = winners.select(
         newSchema.fieldNames.toSeq.map(col) ++
           Seq(col("lsn").as(Model.LsnCol), col("_bucket")): _*)
-      timed("write-base")(clustered(out).write
+      clustered(out).write
         .option("maxRecordsPerFile", 4000000)
         .partitionBy("_bucket")
         .mode("overwrite")
-        .parquet(outDir.toString))
+        .parquet(outDir.toString)
 
       val nUpserts = counters.upserts.value.longValue
       val nDeletes = counters.deletes.value.longValue
-      val written = timed("list-files")(table.listBucketFiles(outDir))
+      val written = table.listBucketFiles(outDir)
       val newEntries = FileStats.entries(spark, written, schemaId)
       val consumed = liveEntries.map(_.path).toSet
       val carried = m.files.filterNot(f => consumed.contains(f.path))
@@ -516,11 +505,11 @@ object MergeEngine {
         val bytesPerRow = known.map(_.bytes).sum.toDouble / known.map(_.rows).sum
         math.max(1L, (targetFileBytes / bytesPerRow).toLong)
       }
-    timed("compact-write")(clustered(out).write
+    clustered(out).write
       .option("maxRecordsPerFile", maxRecords)
       .partitionBy("_bucket")
       .mode("overwrite")
-      .parquet(outDir.toString))
+      .parquet(outDir.toString)
 
     val written = table.listBucketFiles(outDir)
     val newEntries = FileStats.entries(spark, written, m.schemas.size - 1)
@@ -594,10 +583,10 @@ object MergeEngine {
 
     val newVersion = m.version + 1
     val outDir = table.newDataDir(newVersion)
-    timed("purge-write")(clustered(out).write
+    clustered(out).write
       .partitionBy("_bucket")
       .mode("overwrite")
-      .parquet(outDir.toString))
+      .parquet(outDir.toString)
     val newEntries = FileStats.entries(
       spark, table.listBucketFiles(outDir), m.schemas.size - 1)
     val affectedSet = affected.map(_.path).toSet

@@ -141,18 +141,16 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
           else None
         }.toVector
         finally dirStream.close()
-      if (wanted.nonEmpty) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, wanted.size))
-        try {
-          wanted.map { case (v, p) =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = {
-                prefetched.put(v, new String(Files.readAllBytes(p), StandardCharsets.UTF_8)); ()
-              }
-            })
-          }.foreach(_.get())
-        } finally pool.shutdown()
-      }
+      // a manifest that expiry moves to manifests/chain/ between the
+      // listing and the read is simply not prefetched: rawOf falls back
+      // to pathOf, which finds it there
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      Await.result(Future.traverse(wanted) { case (v, p) =>
+        Future(scala.util.Try(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+          .foreach(prefetched.put(v, _)))
+      }, Duration.Inf)
     }
     def pathOf(v: Long): Path =
       if (Files.exists(manifestPath(v))) manifestPath(v)

@@ -43,6 +43,12 @@ class Scd2StreamSpec extends SparkSpec {
     d.select("doc_id", "valid_from_lsn", "valid_to_lsn", "is_current", "payload")
       .collect().map(_.toString).sorted.toSeq
 
+  private def bucketOf(key: String, numBuckets: Int): Int = spark.range(1)
+    .select(SnapshotTable.bucketOf(lit(key), numBuckets)).head.getInt(0)
+
+  /** Open-row files of the current snapshot (closed files carry bucket -1). */
+  private def openFiles(m: Manifest): Seq[FileEntry] = m.files.filter(_.bucket >= 0)
+
   test("streamed fold equals the one-shot rebuild; resurrection refused") {
     val work = tmpDir("scd2stream").toString
     writeLog(s"$work/log")
@@ -64,7 +70,6 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("bucketed open set: untouched buckets carry forward by file identity; emptied buckets drop") {
-    import java.nio.file.{Files => JFiles}
     val work = tmpDir("scd2buckets").toString
     writeLog(s"$work/log")
     val nb = 8
@@ -74,30 +79,33 @@ class Scd2StreamSpec extends SparkSpec {
       maxFilesPerTrigger = Some(1), numBuckets = nb)
     Scd2Stream.start(spark, cfg).awaitTermination()
 
-    def bucketOf(key: String): Int = spark.range(1)
-      .select(pmod(xxhash64(lit(key)), lit(nb.toLong)).cast("int")).head.getInt(0)
     // fresh (watermark-surviving) keys per epoch — the epoch-2
     // re-deliveries of a and b are refused, so they touch nothing
     val freshKeys = Seq(0 -> Seq("a", "b", "c"), 1 -> Seq("a", "b", "d"), 2 -> Seq("c", "e"))
     val lastTouched: Map[Int, Long] = freshKeys
-      .flatMap { case (e, ks) => ks.map(k => bucketOf(k) -> e.toLong) }
+      .flatMap { case (e, ks) => ks.map(k => bucketOf(k, nb) -> e.toLong) }
       .groupMapReduce(_._1)(_._2)(math.max)
     // final open keys: a (a4), c (c7), d (d6), e (e8); b closed by delete
-    val openBuckets = Seq("a", "c", "d", "e").map(bucketOf).toSet
-    val expected = lastTouched.filter { case (b, _) => openBuckets.contains(b) }
+    val openBuckets = Seq("a", "c", "d", "e").map(bucketOf(_, nb)).toSet
+    // version 0 is the empty init; epoch e commits version e + 1
+    val expected = lastTouched.collect { case (b, e) if openBuckets.contains(b) => b -> (e + 1) }
 
-    val meta = Scd2Stream.readMeta(s"$work/table").get
-    assert(meta.buckets === expected,
-      s"bucket map law violated: got ${meta.buckets}, want $expected")
+    val table = new SnapshotTable(s"$work/table")
+    val m = table.manifest.get
+    assert(m.fences(cfg.queryId) === 2L)
+    // the version that added each live file, read off the commits' step diffs
+    val addedAt: Map[String, Long] = table.changesBetween(0L, m.version)
+      .flatMap { case (v, added, _) => added.map(_.path -> v) }.toMap
+    val open = openFiles(m)
+    assert(open.map(_.bucket).distinct.size === open.size, "one open file per bucket")
+    val got = open.map(f => f.bucket -> addedAt(f.path)).toMap
+    assert(got === expected, s"open-set law violated: got $got, want $expected")
     // carry-forward is by FILE IDENTITY: a bucket last touched before the
-    // fence is served from the epoch dir that wrote it — no rewrite
-    val carried = meta.buckets.filter(_._2 < meta.lastEpoch)
+    // fence is served from the file that epoch wrote — no rewrite
+    val carried = open.filter(f => addedAt(f.path) < m.version)
     assert(carried.nonEmpty, "fixture should leave at least one carried-forward bucket")
-    carried.foreach { case (b, e) =>
-      val d = java.nio.file.Paths.get(s"$work/table/open/epoch=$e/_b=$b")
-      assert(JFiles.isDirectory(d), s"carried bucket dir missing: $d")
-      assert(graft.util.Tables.listClosed(d)(
-        _.exists(_.getFileName.toString.startsWith("part-"))), s"no data files at $d")
+    carried.foreach { f =>
+      assert(Files.isRegularFile(Paths.get(f.path)), s"carried bucket file missing: ${f.path}")
     }
     // and the bucketed layout still reproduces the one-shot rebuild
     val fresh = epochs.head.unionByName(epochs(1))
@@ -105,13 +113,15 @@ class Scd2StreamSpec extends SparkSpec {
     assert(canon(Scd2Stream.read(spark, s"$work/table")) ===
       canon(Scd2.fromChangelog(fresh, Seq("doc_id"), "lsn")))
 
-    // vacuum: superseded bucket dirs go, the referenced set stays, reads unchanged
+    // GC: superseded open files go, the referenced set stays, reads unchanged
     val before = canon(Scd2Stream.read(spark, s"$work/table"))
-    Scd2Stream.vacuumOpen(s"$work/table")
-    meta.buckets.foreach { case (b, e) =>
-      assert(JFiles.isDirectory(java.nio.file.Paths.get(s"$work/table/open/epoch=$e/_b=$b")),
-        s"vacuum deleted a live bucket dir (epoch=$e b=$b)")
+    val superseded = addedAt.keySet -- m.files.map(_.path)
+    assert(superseded.nonEmpty, "fixture should supersede at least one open file")
+    table.expireSnapshots(keepLast = 1, minAgeMs = 0)
+    m.files.foreach { f =>
+      assert(Files.isRegularFile(Paths.get(f.path)), s"GC deleted a live file ${f.path}")
     }
+    superseded.foreach { p => assert(!Files.exists(Paths.get(p)), s"GC kept superseded $p") }
     assert(canon(Scd2Stream.read(spark, s"$work/table")) === before)
   }
 
@@ -130,9 +140,9 @@ class Scd2StreamSpec extends SparkSpec {
       logDir = dir, tableDir = s"$work/table", checkpointDir = s"$work/ckpt",
       schema = schema, maxFilesPerTrigger = Some(1), numBuckets = 4)
     Scd2Stream.start(spark, cfg).awaitTermination()
-    val meta = Scd2Stream.readMeta(s"$work/table").get
-    assert(meta.lastEpoch === 1L)
-    assert(meta.buckets.isEmpty, s"deleted-out bucket still mapped: ${meta.buckets}")
+    val m = new SnapshotTable(s"$work/table").manifest.get
+    assert(m.fences(cfg.queryId) === 1L)
+    assert(openFiles(m).isEmpty, s"deleted-out bucket still live: ${openFiles(m)}")
     val t = Scd2Stream.read(spark, s"$work/table")
     assert(t.count() === 1L && t.filter($"is_current").count() === 0L)
   }
@@ -146,11 +156,16 @@ class Scd2StreamSpec extends SparkSpec {
       maxFilesPerTrigger = Some(1))
     Scd2Stream.start(spark, cfg).awaitTermination()
     val before = canon(Scd2Stream.read(spark, s"$work/table"))
-    // simulate the crash window: closed/epoch=99 written, meta never moved
+    // simulate the crash window: a closed part file written under data/
+    // for the next version, which never commits
+    val table = new SnapshotTable(s"$work/table")
+    val phantom = table.newDataDir(table.currentVersion.get + 1).resolve("_bucket=-1")
     Scd2Stream.read(spark, s"$work/table").filter(!$"is_current").limit(1)
-      .write.parquet(s"$work/table/closed/epoch=99")
+      .write.parquet(phantom.toString)
+    assert(graft.util.Tables.listClosed(phantom)(
+      _.exists(_.getFileName.toString.startsWith("part-"))), "phantom part file not written")
     assert(canon(Scd2Stream.read(spark, s"$work/table")) === before,
-      "phantom rows from an uncommitted closed epoch leaked into the read")
+      "phantom rows from an uncommitted epoch leaked into the read")
   }
 
   test("fresh checkpoint against an existing table fails loudly, not silently") {
@@ -170,5 +185,34 @@ class Scd2StreamSpec extends SparkSpec {
       Option(ex.getCause).exists(_.getMessage.contains("below the committed fence")))
     // and the table is untouched
     assert(canon(Scd2Stream.read(spark, s"$work/table")) === before)
+  }
+
+  test("restart with a different numBuckets keeps the table's recorded bucket count") {
+    val work = tmpDir("scd2rebucket").toString
+    val dir = s"$work/log"
+    Files.createDirectories(Paths.get(dir))
+    val keys = (0 until 12).map(i => s"k$i")
+    // the old-modulus/new-modulus mix-up only shows on keys whose bucket
+    // number differs between the two counts
+    assert(keys.exists(k => bucketOf(k, 8) != bucketOf(k, 2)))
+    def df(rows: Seq[(String, Long, Int, String, String)]) =
+      rows.toDF("doc_id", "lsn", "partition", "op", "payload")
+    val first = df(keys.zipWithIndex.map { case (k, i) => (k, i + 1L, i % 2, "I", s"$k-v1") })
+    // every key changes after the restart; every fourth is deleted
+    val second = df(keys.zipWithIndex.map { case (k, i) =>
+      if (i % 4 == 3) (k, 100L + i, i % 2, "D", null) else (k, 100L + i, i % 2, "U", s"$k-v2")
+    })
+    val t0 = System.currentTimeMillis()
+    ChangelogGen.writeSingleFile(first.orderBy("lsn"), Paths.get(dir),
+      "chunk-00000.parquet", Some(t0))
+    val cfg = Scd2Stream.Config(
+      logDir = dir, tableDir = s"$work/table", checkpointDir = s"$work/ckpt",
+      schema = schema, maxFilesPerTrigger = Some(1), numBuckets = 8)
+    Scd2Stream.start(spark, cfg).awaitTermination()
+    ChangelogGen.writeSingleFile(second.orderBy("lsn"), Paths.get(dir),
+      "chunk-00001.parquet", Some(t0 + 1000L))
+    Scd2Stream.start(spark, cfg.copy(numBuckets = 2)).awaitTermination()
+    assert(canon(Scd2Stream.read(spark, s"$work/table")) ===
+      canon(Scd2.fromChangelog(first.unionByName(second), Seq("doc_id"), "lsn")))
   }
 }
